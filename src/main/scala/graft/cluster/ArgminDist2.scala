@@ -14,20 +14,23 @@ import org.apache.spark.sql.types._
   * VERDICT item 3).
   *
   * `left` = the corpus vector (`array<double>`), `right` = the centroid
-  * table collapsed into a single broadcast row:
+  * table collapsed into a single row (a broadcast row, or a literal
+  * when the centroids are driver-held):
   * `array<struct<cid int, cvec array<double>>>`, sorted ascending by
   * cid. Returns `struct(cid, d2)` — the centroid with the minimum
-  * squared distance, ties to the SMALLEST cid.
+  * squared distance, ties to the SMALLEST cid. The per-row code is
+  * [[ArgminDist2.nearest]], which [[PortableKMeans.assign]]'s Lloyd
+  * rounds also call directly inside their one job per round, so the
+  * rounds and the final projection pick winners with the same code.
   *
   * Why a custom expression and not composition (the ShingleMinHash /
   * DotProduct rationale): the explode + groupBy(id) argmin this
   * replaces re-shuffles the whole k×-exploded corpus once per Lloyd
   * round, and the round-20 attempt to unroll k·dims subtraction terms
   * into one projection overflowed janino's method limit (16 codegen
-  * fallbacks, 7.2 s → 18.3 s — see the measured note in
-  * [[PortableKMeans.assign]]). A LOOP in generated code is ~30 lines
+  * fallbacks, 7.2 s → 18.3 s). A LOOP in generated code is ~30 lines
   * regardless of k·dims, keeps whole-stage codegen intact, and makes
-  * assign a pure projection: zero corpus shuffles per round.
+  * assign a pure projection: zero corpus shuffles.
   *
   * Bit-parity with the aggregate form it replaces
   * (`min(struct(dist2Unrolled(v, cvec, dims), cid))`), pinned in
@@ -66,39 +69,11 @@ case class ArgminDist2(left: Expression, right: Expression, dims: Int)
   override def prettyName: String = "graft_argmin_dist2"
 
   override def nullSafeEval(a: Any, b: Any): Any = {
-    val v = a.asInstanceOf[ArrayData]
     val cents = b.asInstanceOf[ArrayData]
-    if (v.numElements() < dims) return null
-    var best = -1
-    var bestD = 0.0
-    var found = false
-    var j = 0
-    val k = cents.numElements()
-    while (j < k) {
-      if (!cents.isNullAt(j)) {
-        val cr = cents.getStruct(j, 2)
-        val cv = cr.getArray(1)
-        if (cv.numElements() >= dims) {
-          var s = 0.0
-          var ok = true
-          var i = 0
-          while (i < dims && ok) {
-            if (v.isNullAt(i) || cv.isNullAt(i)) ok = false
-            else {
-              val d = v.getDouble(i) - cv.getDouble(i)
-              s += d * d
-            }
-            i += 1
-          }
-          if (ok && (!found || java.lang.Double.compare(s, bestD) < 0)) {
-            found = true; bestD = s; best = cr.getInt(0)
-          }
-        }
-      }
-      j += 1
-    }
-    if (!found) null
-    else new GenericInternalRow(Array[Any](best, bestD))
+    val d2 = new Array[Double](1)
+    val j = ArgminDist2.nearest(a.asInstanceOf[ArrayData], cents, dims, d2)
+    if (j < 0) null
+    else new GenericInternalRow(Array[Any](cents.getStruct(j, 2).getInt(0), d2(0)))
   }
 
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -152,6 +127,44 @@ case class ArgminDist2(left: Expression, right: Expression, dims: Int)
 }
 
 object ArgminDist2 {
+  /** The per-row kernel shared by [[ArgminDist2.nullSafeEval]] and the
+    * driver-held Lloyd loop of [[PortableKMeans.assign]] (the generated
+    * code in `doGenCode` is its Java transcription): the POSITION in
+    * `cents` of the nearest centroid (ties to the first, i.e. the
+    * smallest cid), with its squared distance written to `d2(0)`; −1
+    * when `v` is shorter than `dims` or no centroid is comparable. */
+  def nearest(v: ArrayData, cents: ArrayData, dims: Int, d2: Array[Double]): Int = {
+    if (v.numElements() < dims) return -1
+    var best = -1
+    var bestD = 0.0
+    var j = 0
+    val k = cents.numElements()
+    while (j < k) {
+      if (!cents.isNullAt(j)) {
+        val cv = cents.getStruct(j, 2).getArray(1)
+        if (cv.numElements() >= dims) {
+          var s = 0.0
+          var ok = true
+          var i = 0
+          while (i < dims && ok) {
+            if (v.isNullAt(i) || cv.isNullAt(i)) ok = false
+            else {
+              val d = v.getDouble(i) - cv.getDouble(i)
+              s += d * d
+            }
+            i += 1
+          }
+          if (ok && (best < 0 || java.lang.Double.compare(s, bestD) < 0)) {
+            bestD = s; best = j
+          }
+        }
+      }
+      j += 1
+    }
+    d2(0) = bestD
+    best
+  }
+
   /** Column factory: `argmin(v, cents)` with `cents` the sorted
     * single-row centroid array — see the class doc. */
   def apply(v: Column, cents: Column, dims: Int): Column =

@@ -54,4 +54,13 @@ object Rx {
   def r4(c: Column): Column = round(c + lit(EPS), 4)
   /** Per-row arithmetic / small rationals (bit-identical across engines). */
   def r6(c: Column): Column = round(c + lit(EPS), 6)
+  /** Driver-side [[r6]]: the same `x + 1e-9` nudge, then Spark's own
+    * `Round` on a double (HALF_UP on `BigDecimal(x)`, NaN and ±∞ passed
+    * through), so a value canonicalized on the driver equals the
+    * column form bit for bit (pinned in RxSpec). */
+  def r6(x: Double): Double = {
+    val y = x + EPS
+    if (y.isNaN || y.isInfinite) y
+    else BigDecimal(y).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+  }
 }

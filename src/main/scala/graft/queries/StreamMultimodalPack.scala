@@ -16,6 +16,18 @@ object StreamMultimodalPack extends QueryPack {
 
   private val counter = new java.util.concurrent.atomic.AtomicInteger(0)
 
+  /** The memory-sink temp views the stream queries register
+    * (`st9_out_17`): each holds its sink's rows until dropped. */
+  private val SinkView = "st\\d+_out_\\d+".r
+
+  /** Drop this session's memory-sink views, so a long-lived session
+    * does not keep every drained sink's rows on the heap. A frame a
+    * query already returned keeps its own reference to the sink. */
+  override def clearCaches(session: org.apache.spark.sql.SparkSession): Unit =
+    session.catalog.listTables().collect()
+      .filter(t => t.isTemporary && SinkView.matches(t.name))
+      .foreach(t => session.catalog.dropTempView(t.name))
+
   /** Drain a started stream, recording its peak state-store rows under
     * the query's stable prefix ("st9_out_17" → "st9") so Bench can
     * emit the measured state sizes (StateMetrics sideline). */

@@ -3,7 +3,6 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.sim.{IvfPq, Pq}
-import graft.cluster.PortableKMeans
 import graft.sketch.HistQuantile
 
 /** The engine's only unpartitioned windows run over SKETCH-sized frames
@@ -31,14 +30,6 @@ class BoundedWindowSpec extends AnyFunSuite {
   test("IvfPq.coarseCells rejects an unbounded cell window") {
     val e = intercept[IllegalArgumentException] {
       IvfPq.coarseCells(vecs, "vec_id", "v", nCells = 65537)
-    }
-    assert(e.getMessage.contains("single-partition"))
-  }
-
-  test("PortableKMeans.assign rejects an unbounded centroid window") {
-    val e = intercept[IllegalArgumentException] {
-      PortableKMeans.assign(vecs, "vec_id", "v", k = 65537,
-        rounds = 1, dims = 2)
     }
     assert(e.getMessage.contains("single-partition"))
   }

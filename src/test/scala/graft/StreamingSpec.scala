@@ -815,4 +815,23 @@ class StreamingSpec extends AnyFunSuite {
     val want = all.groupBy(identity).view.mapValues(_.size.toLong).toMap
     assert(got === want)
   }
+
+  test("clearPackCaches drops the memory-sink views; a rerun hashes the same") {
+    val sf = "/root/testdata/sf0.001"
+    // the pack's sink views (`st3_out_7`); other specs name their own
+    def sinkViews = spark.catalog.listTables().collect()
+      .filter(t => t.isTemporary && t.name.matches("st\\d+_out_\\d+")).map(_.name)
+    def digest(df: org.apache.spark.sql.DataFrame) =
+      df.agg(count(lit(1)),
+          sum(xxhash64(df.columns.map(col).toIndexedSeq: _*).cast("decimal(38,0)")))
+        .collect().head.toSeq
+    val first = digest(SparkEntry.queries("st3_stream_dedup")(spark, sf))
+    assert(sinkViews.exists(_.startsWith("st3_out_")))
+    SparkEntry.clearPackCaches(spark)
+    assert(sinkViews.isEmpty, s"views left: ${sinkViews.mkString(", ")}")
+    val out = SparkEntry.queries("st3_stream_dedup")(spark, sf)
+    SparkEntry.clearPackCaches(spark)
+    assert(digest(out) == first)
+    assert(sinkViews.isEmpty)
+  }
 }
